@@ -4,17 +4,17 @@ Reference analog: Prajna expresses iterative graph passes as repeated
 DSet self-mixes driven from the driver (paper §3's iterative-map pattern;
 /root/reference/src/CoreLib/DSetGenerics.fs:1127 ``mapByCollection`` +
 fold loops). Spark-first spelling: a driver loop of frontier⋈edges hash
-joins with localCheckpoint per round — the same discipline as
-pipeline.dedup.connected_components (plan/lineage O(1), superseded
-checkpoints released eagerly, SHUFFLE_HASH hints so no per-round
-broadcast build competes for the shared local heap).
+joins on :func:`~prajna_spark.operators.lifecycle.iterate`, with
+SHUFFLE_HASH hints so no per-round broadcast build competes for the
+shared local heap.
 
 Scale notes (100 TB contract):
 - per round the only edge-cardinality shuffle is frontier⋈edges keyed on
   the node id; the visited set and frontier are node-cardinality;
-- the frontier naturally shrinks once the reachable set saturates; the
-  early-exit reads the frontier's count from the SAME observe() that
-  rides the checkpoint job — no extra count() job per round;
+- the state is ONE frame, the visited set with its hop counts, whose
+  ``fresh`` rows (last round's arrivals) are the frontier — one
+  checkpoint job per round; the early exit reads the visited count
+  from the observe() that rides that job;
 - distances are correct-by-construction minima: a node enters the
   visited set the first round it is reached, and later arrivals are
   anti-joined away.
@@ -24,10 +24,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Observation
 
 from prajna_spark.operators.lifecycle import (
-    release_local_checkpoint,
+    iterate,
+    persist_scope,
     scoped_local_checkpoint,
 )
 
@@ -48,44 +48,33 @@ def multi_source_bfs(
     exactly what a DuckDB ``WITH RECURSIVE`` replay computes, which is the
     catalog oracle for this operator.
     """
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    e = e.transform(scoped_local_checkpoint)
-
-    frontier = (
-        seeds.select(F.col(id_col).alias("nid")).distinct().transform(scoped_local_checkpoint)
-    )
-    visited = frontier.withColumn("hops", F.lit(0).cast("long"))
-    visited = visited.transform(scoped_local_checkpoint)
-
-    for hop in range(1, max_hops + 1):
-        reached = (
-            e.join(frontier.hint("SHUFFLE_HASH"), e.src == frontier.nid)
-            .select(F.col("dst").alias("nid"))
-            .distinct()
+    with persist_scope():
+        e = scoped_local_checkpoint(
+            edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         )
-        obs = Observation()
-        new_frontier = (
-            reached.join(visited.hint("SHUFFLE_HASH"), "nid", "left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .transform(scoped_local_checkpoint)
+        visited = seeds.select(F.col(id_col).alias("nid")).distinct().select(
+            "nid", F.lit(0).cast("long").alias("hops"), F.lit(True).alias("fresh")
         )
-        release_local_checkpoint(frontier)
-        frontier = new_frontier
-        if (obs.get["n"] or 0) == 0:
-            break
-        prev_visited = visited
-        visited = visited.unionAll(
-            frontier.withColumn("hops", F.lit(hop).cast("long"))
-        ).transform(scoped_local_checkpoint)
-        release_local_checkpoint(prev_visited)
 
-    out = visited.select(F.col("nid").alias("node_id"), "hops").transform(
-        scoped_local_checkpoint
-    )
-    release_local_checkpoint(visited)
-    release_local_checkpoint(frontier)
-    release_local_checkpoint(e)
-    return out
+        def step(visited: DataFrame) -> DataFrame:
+            frontier = visited.where("fresh")
+            reached = (
+                e.join(frontier.hint("SHUFFLE_HASH"), e.src == frontier.nid)
+                .select(F.col("dst").alias("nid"), (F.col("hops") + 1).alias("hops"))
+                .distinct()
+            )
+            new = reached.join(
+                visited.select("nid").hint("SHUFFLE_HASH"), "nid", "left_anti"
+            )
+            return visited.select(
+                "nid", "hops", F.lit(False).alias("fresh")
+            ).unionAll(new.withColumn("fresh", F.lit(True)))
+
+        # the hop bound defines the result, so hitting it is not an error
+        visited = iterate(
+            visited, step, max_hops, counter=F.count(F.lit(1)), must_converge=False
+        )
+    return visited.select(F.col("nid").alias("node_id"), "hops")
 
 
 def bounded_sssp(
@@ -105,40 +94,31 @@ def bounded_sssp(
     nodes absent.
 
     Each round is one edge-cardinality hash join (dist side SHUFFLE_HASH
-    — no per-round broadcast build) + a node-keyed min aggregation;
-    localCheckpoint keeps plan/lineage O(1) and superseded rounds are
-    released eagerly. Distances accumulate left-associatively per hop
-    (d + w at each relaxation), the exact op sequence the oracle's
-    unrolled ladder replays — min over IEEE doubles is engine-portable,
-    so bounded-SSSP is hash-checkable, no rounding slack needed beyond
-    the final display rounding."""
-    e = edges.select(
-        F.col(src_col).alias("src"),
-        F.col(dst_col).alias("dst"),
-        F.col(weight_col).cast("double").alias("w"),
-    ).transform(scoped_local_checkpoint)
+    — no per-round broadcast build) + a node-keyed min aggregation, on
+    :func:`~prajna_spark.operators.lifecycle.iterate`. Distances
+    accumulate left-associatively per hop (d + w at each relaxation), the
+    exact op sequence the oracle's unrolled ladder replays — min over
+    IEEE doubles is engine-portable, so bounded-SSSP is hash-checkable,
+    no rounding slack needed beyond the final display rounding."""
+    with persist_scope():
+        e = scoped_local_checkpoint(
+            edges.select(
+                F.col(src_col).alias("src"),
+                F.col(dst_col).alias("dst"),
+                F.col(weight_col).cast("double").alias("w"),
+            )
+        )
+        dist = seeds.select(F.col(id_col).alias("nid")).distinct().withColumn(
+            "dist", F.lit(0.0)
+        )
 
-    dist = (
-        seeds.select(F.col(id_col).alias("nid"))
-        .distinct()
-        .withColumn("dist", F.lit(0.0))
-        .transform(scoped_local_checkpoint)
-    )
-    for _ in range(max_hops):
-        cand = e.join(dist.hint("SHUFFLE_HASH"), e.src == dist.nid).select(
-            F.col("dst").alias("nid"), (F.col("dist") + F.col("w")).alias("dist")
-        )
-        prev = dist
-        dist = (
-            dist.unionAll(cand)
-            .groupBy("nid")
-            .agg(F.min("dist").alias("dist"))
-            .transform(scoped_local_checkpoint)
-        )
-        release_local_checkpoint(prev)
-    out = dist.select(
+        def step(dist: DataFrame) -> DataFrame:
+            cand = e.join(dist.hint("SHUFFLE_HASH"), e.src == dist.nid).select(
+                F.col("dst").alias("nid"), (F.col("dist") + F.col("w")).alias("dist")
+            )
+            return dist.unionAll(cand).groupBy("nid").agg(F.min("dist").alias("dist"))
+
+        dist = iterate(dist, step, max_hops)
+    return dist.select(
         F.col("nid").alias("node_id"), F.round("dist", decimals).alias("dist")
-    ).transform(scoped_local_checkpoint)
-    release_local_checkpoint(dist)
-    release_local_checkpoint(e)
-    return out
+    )

@@ -24,10 +24,12 @@ active scope.
 from __future__ import annotations
 
 import logging
+import operator
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 _log = logging.getLogger(__name__)
 
@@ -53,14 +55,12 @@ def scoped_local_checkpoint(
 
     ``unpersist`` is a silent no-op for checkpointed frames (see
     :func:`release_local_checkpoint`), so scope exit releases these via
-    the LogicalRDD leaf directly. Iterative operators route EVERY
-    generation through this: superseded generations they release
-    themselves mid-loop stay released (double-release is a no-op), and
-    the FINAL generation — which previously outlived the query until an
-    eventual JVM GC, the exact mechanism behind the r7 label-propagation
-    leak — is freed deterministically at scope exit. Outside any scope
-    the behavior is plain localCheckpoint (session-lifetime blocks), as
-    before.
+    the LogicalRDD leaf directly. Every generation of an iterative
+    operator goes through this (see :func:`iterate`), so the FINAL
+    generation — which once outlived the query until an eventual JVM GC,
+    the exact mechanism behind the r7 label-propagation leak — is freed
+    deterministically at scope exit. Outside any scope the behavior is
+    plain localCheckpoint (session-lifetime blocks), as before.
 
     ``parent=True`` registers with the ENCLOSING scope instead: for a
     checkpoint that materializes a function's RETURN VALUE inside that
@@ -158,12 +158,8 @@ def release_local_checkpoint(df: DataFrame, blocking: bool = False) -> None:
     goes through that leaf's RDD directly.
 
     Call it on the checkpointed frame (or a narrow projection of one)
-    once nothing reachable needs it: the iterative operators (connected
-    components, PageRank) release each superseded generation to keep
-    live checkpoint storage bounded at ~2 generations instead of one per
-    iteration — in local mode driver and executors share a single heap,
-    and unbounded pinned generations starve AQE broadcast builds
-    (observed at 10x data, commit be7318d's dense-graph OOM).
+    once nothing reachable needs it — :func:`iterate` does, for each
+    superseded generation of an iterative operator.
 
     Only ``LogicalRDD`` leaves are touched; any other plan shape is left
     alone. Do NOT call it on a frame that JOINS a still-needed
@@ -175,3 +171,76 @@ def release_local_checkpoint(df: DataFrame, blocking: bool = False) -> None:
         node = leaves.apply(i)
         if node.getClass().getSimpleName() == "LogicalRDD":
             node.rdd().unpersist(blocking)
+
+
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    max_rounds: int,
+    *,
+    counter: Column | None = None,
+    converged: Callable[[int, int], bool] = operator.eq,
+    must_converge: bool = True,
+    checkpoint_every: int = 1,
+) -> DataFrame:
+    """The driver-side fixpoint loop of every iterative operator (Prajna's
+    DSet fold loops, DSetGenerics.fs:1127; a Pregel superstep per round):
+    ``state`` is generation 0, ``step`` maps one generation to the next,
+    for at most ``max_rounds`` rounds. Returns the last generation.
+
+    Checkpoints. Generations are materialized through
+    :func:`scoped_local_checkpoint`: persist alone does not truncate the
+    logical plan, and Catalyst stack-overflows around 15 chained join
+    rounds. ``checkpoint_every=k`` materializes only every k-th
+    generation (and the last); the ones between stay lazy and run inside
+    the next checkpoint's job — valid only when each generation has ONE
+    consumer, the next step. A superseded checkpoint is released as soon
+    as its successor exists, so at most two generations are pinned: in
+    local mode driver and executors share one heap, and unbounded pinned
+    generations starved AQE broadcast builds at 10x (commit be7318d).
+
+    Ownership. Call it inside the operator's own :func:`persist_scope`,
+    which also owns the operator's loop-invariant checkpoints and frees
+    them when the operator returns. Generations register with the
+    ENCLOSING scope (``parent=True``), so the returned one belongs to the
+    operator's caller, like any operator result.
+
+    Convergence. ``counter`` is an aggregate observed on every
+    materialized generation (generation 0 included) by ``observe()``, so
+    it rides the checkpoint job — no extra ``count()`` job. The loop stops
+    once ``converged(previous, current)`` holds (default: the counter
+    stopped moving). A budget that runs out first raises RuntimeError —
+    unconverged state must not pass for a fixpoint — unless
+    ``must_converge=False``, for a bound that is part of the result's
+    definition (BFS's hop bound). Without a counter the loop runs exactly
+    ``max_rounds`` rounds."""
+
+    def materialize(df: DataFrame) -> tuple[DataFrame, int | None]:
+        if counter is None:
+            return scoped_local_checkpoint(df, parent=True), None
+        obs = Observation()
+        ckpt = scoped_local_checkpoint(df.observe(obs, counter.alias("n")), parent=True)
+        return ckpt, obs.get["n"] or 0
+
+    def release(df: DataFrame) -> None:
+        release_local_checkpoint(df)
+        for bag in _ACTIVE_CKPT:
+            bag[:] = [d for d in bag if d is not df]
+
+    live, n_prev = materialize(state)
+    gen = live
+    for i in range(max_rounds):
+        gen = step(gen)
+        if (i + 1) % checkpoint_every and i < max_rounds - 1:
+            continue
+        gen, n = materialize(gen)
+        release(live)
+        live = gen
+        if counter is not None and converged(n_prev, n):
+            return live
+        n_prev = n
+    if counter is not None and must_converge:
+        release(live)
+        name = step.__qualname__.replace(".<locals>", "")
+        raise RuntimeError(f"{name} did not converge within {max_rounds} rounds")
+    return live

@@ -1,14 +1,9 @@
 """Distributed PageRank — fixed-iteration power method on a DataFrame
 edge list.
 
-The third iterative-algorithm operator (after connected components,
-pipeline/dedup.py:368, and Lloyd k-means, pipeline/similarity.py:432),
-sharing their hard-won loop discipline:
+The rounds run on :func:`~prajna_spark.operators.lifecycle.iterate`
+(checkpoint per round, superseded generations released), with:
 
-- localCheckpoint per iteration (persist does NOT truncate lineage; an
-  unbounded join chain stack-overflows Catalyst around 15 rounds);
-- superseded checkpoints unpersisted immediately (bounded generations —
-  local mode shares one heap between driver and executors);
 - SHUFFLE_HASH hints on every rank-cardinality join side (a broadcast
   build of a node-cardinality frame is never right at scale, and AQE's
   attempted local-mode broadcasts OOM on dense graphs — the connected-
@@ -32,7 +27,8 @@ from pyspark.sql import functions as F
 
 from prajna_spark.functions.rounding import pround
 from prajna_spark.operators.lifecycle import (
-    release_local_checkpoint,
+    iterate,
+    persist_scope,
     scoped_local_checkpoint,
 )
 
@@ -53,63 +49,48 @@ def pagerank(
     out-edges) is redistributed uniformly via a one-row aggregate.
     Returns ``(node_id, pr)`` for every node.
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).transform(scoped_local_checkpoint)
-    nodes = (
-        e.select(F.col("src").alias("nid"))
-        .unionAll(e.select(F.col("dst").alias("nid")))
-        .distinct()
-        .transform(scoped_local_checkpoint)
-    )
-    deg = e.groupBy("src").agg(
-        F.count(F.lit(1)).cast("double").alias("outd")
-    ).transform(scoped_local_checkpoint)
-    n_df = nodes.agg(F.count(F.lit(1)).cast("double").alias("n"))
-
-    ranks = (
-        nodes.crossJoin(F.broadcast(n_df))
-        .select("nid", pround(F.lit(1.0) / F.col("n"), round_decimals).alias("r"))
-        .transform(scoped_local_checkpoint)
-    )
-
     base = float(1.0 - damping)
-    for _ in range(n_iter):
-        contrib = (
-            e.join(ranks.hint("SHUFFLE_HASH"), e.src == ranks.nid)
-            .join(deg.hint("SHUFFLE_HASH"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("r") / F.col("outd")).alias("m"))
+    with persist_scope():
+        e = scoped_local_checkpoint(
+            edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         )
-        dangling = (
-            ranks.join(deg.hint("SHUFFLE_HASH"), ranks.nid == deg.src, "left_anti")
-            .agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("dang"))
+        nodes = scoped_local_checkpoint(
+            e.select(F.col("src").alias("nid"))
+            .unionAll(e.select(F.col("dst").alias("nid")))
+            .distinct()
         )
-        new_ranks = (
-            nodes.crossJoin(F.broadcast(n_df))
-            .crossJoin(F.broadcast(dangling))
-            .join(contrib.hint("SHUFFLE_HASH"), nodes.nid == contrib.dst, "left")
-            .select(
-                "nid",
-                pround(
-                    F.lit(base) / F.col("n")
-                    + F.lit(damping)
-                    * (F.coalesce("m", F.lit(0.0)) + F.col("dang") / F.col("n")),
-                    round_decimals,
-                ).alias("r"),
-            )
-            .transform(scoped_local_checkpoint)
+        deg = scoped_local_checkpoint(
+            e.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("outd"))
         )
-        prev = ranks
-        ranks = new_ranks
-        # release the superseded generation's checkpoint blocks — plain
-        # Dataset.unpersist() would be a no-op here (see lifecycle)
-        release_local_checkpoint(prev)
+        n_df = nodes.agg(F.count(F.lit(1)).cast("double").alias("n"))
+        ranks = nodes.crossJoin(F.broadcast(n_df)).select(
+            "nid", pround(F.lit(1.0) / F.col("n"), round_decimals).alias("r")
+        )
 
-    out = ranks.select(F.col("nid").alias("node_id"), F.col("r").alias("pr"))
-    # the result depends only on the final ranks checkpoint (lineage was
-    # severed); the iteration-invariant inputs can be released now
-    release_local_checkpoint(e)
-    release_local_checkpoint(nodes)
-    release_local_checkpoint(deg)
-    return out
+        def step(ranks: DataFrame) -> DataFrame:
+            contrib = (
+                e.join(ranks.hint("SHUFFLE_HASH"), e.src == ranks.nid)
+                .join(deg.hint("SHUFFLE_HASH"), "src")
+                .groupBy("dst")
+                .agg(F.sum(F.col("r") / F.col("outd")).alias("m"))
+            )
+            dangling = ranks.join(
+                deg.hint("SHUFFLE_HASH"), ranks.nid == deg.src, "left_anti"
+            ).agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("dang"))
+            return (
+                nodes.crossJoin(F.broadcast(n_df))
+                .crossJoin(F.broadcast(dangling))
+                .join(contrib.hint("SHUFFLE_HASH"), nodes.nid == contrib.dst, "left")
+                .select(
+                    "nid",
+                    pround(
+                        F.lit(base) / F.col("n")
+                        + F.lit(damping)
+                        * (F.coalesce("m", F.lit(0.0)) + F.col("dang") / F.col("n")),
+                        round_decimals,
+                    ).alias("r"),
+                )
+            )
+
+        ranks = iterate(ranks, step, n_iter)
+    return ranks.select(F.col("nid").alias("node_id"), F.col("r").alias("pr"))

@@ -17,13 +17,14 @@ north-star LLM-pipeline surface (BASELINE.json).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from prajna_spark.functions.rounding import pround
 from prajna_spark.operators.fanout import fan_out
 from prajna_spark.operators.lifecycle import (
-    release_local_checkpoint,
+    iterate,
+    persist_scope,
     scoped_local_checkpoint,
     scoped_persist,
 )
@@ -404,16 +405,14 @@ def connected_components(
     iterations instead of O(diameter) — the difference between 4 and 40
     shuffles on a path-shaped component. Per iteration: edges⋈labels +
     groupBy min + the jump self-join; the change flag is computed INLINE
-    and harvested via ``observe()`` DURING the checkpoint job — no extra
-    count() job (or join) per round.
-    Labels are localCheckpoint'ed each round — persist alone does NOT
-    truncate the logical plan, and an iterative chain of joins otherwise
-    grows a plan Catalyst can't even print (StackOverflow at ~15 rounds);
-    checkpointing keeps plan AND lineage O(1). On a real cluster use a
-    reliable checkpoint dir for fault tolerance. For adversarial graphs at
-    extreme scale the large-star/small-star alternation (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) is the same
-    building blocks with the same O(log) round bound.
+    and counted by :func:`~prajna_spark.operators.lifecycle.iterate`
+    DURING the checkpoint job — no extra count() job (or join) per round.
+    Raises RuntimeError if labels still change after ``max_iter`` rounds.
+    On a real cluster use a reliable checkpoint dir for fault tolerance.
+    For adversarial graphs at extreme scale the large-star/small-star
+    alternation (Kiveris et al., "Connected Components in MapReduce and
+    Beyond", SoCC'14) is the same building blocks with the same O(log)
+    round bound.
 
     Returns (id_col, component_id) for EVERY node; singletons map to
     themselves.
@@ -423,79 +422,60 @@ def connected_components(
     # one-pass symmetrization: the union spelling executed the caller's
     # candidate-pair derivation (often a whole LSH pipeline) twice inside
     # this checkpoint job (r11)
-    e = symmetrize(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
-        "src",
-        "dst",
-    )
-    e = e.transform(scoped_local_checkpoint)
-    labels = nodes.select(
-        F.col(id_col).alias("nid"), F.col(id_col).alias("label")
-    ).transform(scoped_local_checkpoint)
-
-    # Every join below is hinted SHUFFLE_HASH: the label/neighbour frames
-    # are corpus-cardinality, so at scale a broadcast build is never the
-    # right plan — and in local mode AQE's attempted driver-side broadcast
-    # builds (one per iteration, inside each checkpoint job) exhausted the
-    # shared heap on a dense 16M-edge graph. Shuffle-hash keeps per-round
-    # memory bounded by a partition, not a table.
-    for _ in range(max_iter):
-        neigh_min = (
-            e.join(labels.hint("SHUFFLE_HASH"), e.src == labels.nid)
-            .groupBy("dst")
-            .agg(F.min("label").alias("nl"))
-        )
-        one_hop = labels.join(
-            neigh_min.hint("SHUFFLE_HASH"), labels.nid == neigh_min.dst, "left"
-        ).select(
-            "nid",
-            F.col("label").alias("old"),
-            F.least(F.col("label"), F.coalesce("nl", F.col("label"))).alias("label"),
-        )
-        # Pointer jump: label := label-of-label. Labels are node ids, so
-        # this is a left self-join on (label == nid); labels only decrease,
-        # which keeps every intermediate label inside its own component.
-        jump = one_hop.select(
-            F.col("nid").alias("jnid"), F.col("label").alias("jlabel")
-        )
-        obs = Observation()
-        new_labels = (
-            one_hop.join(jump.hint("SHUFFLE_HASH"), one_hop.label == jump.jnid, "left")
-            .select(
-                "nid",
-                F.least(
-                    F.col("label"), F.coalesce("jlabel", F.col("label"))
-                ).alias("label"),
-                (
-                    F.least(F.col("label"), F.coalesce("jlabel", F.col("label")))
-                    < F.col("old")
-                ).alias("__chg"),
+    with persist_scope():
+        e = scoped_local_checkpoint(
+            symmetrize(
+                edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
+                "src",
+                "dst",
             )
-            .observe(obs, F.sum(F.col("__chg").cast("long")).alias("chg"))
-            .transform(scoped_local_checkpoint)
         )
-        changed = obs.get["chg"] or 0
-        # Release the superseded checkpoint NOW: each localCheckpoint pins
-        # its RDD in storage memory, and in local mode driver+executors
-        # share one heap — 20 pinned generations starved AQE's broadcast
-        # builds at 10x data (observed: "Not enough memory to build and
-        # broadcast" inside the loop). Bounded to 2 live generations.
-        # Dataset.unpersist() is a no-op on checkpointed frames — the
-        # release must go through the LogicalRDD leaf (see lifecycle).
-        prev = labels
-        labels = new_labels.select("nid", "label")
-        release_local_checkpoint(prev)
-        if changed == 0:
-            break
+        labels = nodes.select(
+            F.col(id_col).alias("nid"),
+            F.col(id_col).alias("label"),
+            F.lit(False).alias("__chg"),
+        )
 
-    out = labels.select(
-        F.col("nid").alias(id_col), F.col("label").alias("component_id")
-    ).transform(scoped_local_checkpoint)
-    # the returned frame is its own checkpoint; the loop's last label
-    # generation and the doubled edge list are no longer reachable
-    release_local_checkpoint(labels)
-    release_local_checkpoint(e)
-    return out
+        # Every join below is hinted SHUFFLE_HASH: the label/neighbour
+        # frames are corpus-cardinality, so at scale a broadcast build is
+        # never the right plan — and in local mode AQE's attempted
+        # driver-side broadcast builds (one per iteration, inside each
+        # checkpoint job) exhausted the shared heap on a dense 16M-edge
+        # graph. Shuffle-hash keeps per-round memory bounded by a
+        # partition, not a table.
+        def min_label_round(labels: DataFrame) -> DataFrame:
+            neigh_min = (
+                e.join(labels.hint("SHUFFLE_HASH"), e.src == labels.nid)
+                .groupBy("dst")
+                .agg(F.min("label").alias("nl"))
+            )
+            one_hop = labels.join(
+                neigh_min.hint("SHUFFLE_HASH"), labels.nid == neigh_min.dst, "left"
+            ).select(
+                "nid",
+                F.col("label").alias("old"),
+                F.least(F.col("label"), F.coalesce("nl", F.col("label"))).alias("label"),
+            )
+            # Pointer jump: label := label-of-label. Labels are node ids, so
+            # this is a left self-join on (label == nid); labels only
+            # decrease, which keeps every intermediate label inside its own
+            # component.
+            jump = one_hop.select(
+                F.col("nid").alias("jnid"), F.col("label").alias("jlabel")
+            )
+            jumped = F.least(F.col("label"), F.coalesce("jlabel", F.col("label")))
+            return one_hop.join(
+                jump.hint("SHUFFLE_HASH"), one_hop.label == jump.jnid, "left"
+            ).select("nid", jumped.alias("label"), (jumped < F.col("old")).alias("__chg"))
+
+        labels = iterate(
+            labels,
+            min_label_round,
+            max_iter,
+            counter=F.sum(F.col("__chg").cast("long")),
+            converged=lambda _, changed: changed == 0,
+        )
+    return labels.select(F.col("nid").alias(id_col), F.col("label").alias("component_id"))
 
 
 def verify_pairs_jaccard(
@@ -687,7 +667,11 @@ def jaccard_similarity_join(
     Jaccard can never round a true near-threshold pair into a set the
     prefix already excluded.
 
-    Returns (id_a, id_b, jaccard) with id_a < id_b.
+    Returns (id_a, id_b, jaccard) with id_a < id_b. The result reads an
+    eager checkpoint of the shingle sets registered with the caller's
+    :func:`persist_scope`: consume it INSIDE that scope — after the scope
+    exits the blocks are freed and, lineage being truncated, cannot be
+    recomputed.
     """
     from prajna_spark.operators.zipindex import zip_with_index
 

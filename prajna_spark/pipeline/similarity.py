@@ -385,63 +385,6 @@ def knn_ivf(
     )
 
 
-def knn_lsh(
-    vectors: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_planes: int = 8,
-) -> DataFrame:
-    """ANN top-k: equi-join on SRP bucket, then exact cosine within bucket.
-
-    The scale path — candidate generation is a shuffle on the bucket id
-    (2^n_planes distinct keys; raise n_planes to shrink buckets as n
-    grows), never a cross join.
-    """
-    vb = with_norm(
-        vectors.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            srp_bucket(F.col(vec_col), dim, n_planes).alias("bucket"),
-        ),
-        "c_vec",
-        "c_norm",
-    )
-    qb = with_norm(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            srp_bucket(F.col(vec_col), dim, n_planes).alias("bucket"),
-        ),
-        "q_vec",
-        "q_norm",
-    )
-    scored = (
-        vb.join(F.broadcast(qb), "bucket")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            pround(
-                paired_cosine(
-                    F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
-                ),
-                6,
-            ).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rk")
-    )
-
-
 def build_ivf_index(
     vectors: DataFrame,
     centroids: DataFrame,

@@ -7,6 +7,7 @@ tests' leftover caches.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from prajna_spark.dset import DSet
@@ -93,34 +94,74 @@ def test_release_local_checkpoint_actually_frees_blocks(spark):
 
 
 def test_iterative_operators_leave_bounded_checkpoints(spark):
-    """connected_components and pagerank release superseded generations
-    and loop-invariant inputs: after a call, at most ONE new pinned RDD
-    (the returned frame's own checkpoint) remains."""
+    """Every operator built on lifecycle.iterate releases superseded
+    generations and loop-invariant inputs: after a call, at most ONE new
+    pinned RDD (the returned frame's own checkpoint) remains."""
+    from prajna_spark.operators.bfs import bounded_sssp, multi_source_bfs
+    from prajna_spark.operators.labelprop import label_propagation
     from prajna_spark.operators.lifecycle import release_local_checkpoint
     from prajna_spark.operators.pagerank import pagerank
+    from prajna_spark.operators.triangles import k_core
     from prajna_spark.pipeline.dedup import connected_components
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6)], "id_a long, id_b long"
     )
     nodes = spark.createDataFrame([(i,) for i in range(1, 7)], "id long")
-
-    base = _cached_ids(spark)
-    cc = connected_components(edges, nodes)
-    assert cc.count() == 6
-    cc_new = _cached_ids(spark) - base
-    assert len(cc_new) <= 1, f"CC left {len(cc_new)} pinned RDDs"
-    release_local_checkpoint(cc, blocking=True)
-
     pr_edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (4, 1)], "src long, dst long"
     )
+    w_edges = pr_edges.withColumn("w", F.lit(1.5))
+    seeds = spark.createDataFrame([(1,)], "nid long")
+    cases = {
+        "connected_components": (lambda: connected_components(edges, nodes), 6),
+        "pagerank": (lambda: pagerank(pr_edges, n_iter=6), 4),
+        "label_propagation": (lambda: label_propagation(pr_edges, n_iter=3), 4),
+        "multi_source_bfs": (lambda: multi_source_bfs(pr_edges, seeds, 4), 3),
+        "bounded_sssp": (lambda: bounded_sssp(w_edges, seeds, 4), 3),
+        "k_core": (lambda: k_core(pr_edges, 2), 3),
+    }
+    for name, (run, n_rows) in cases.items():
+        base = _cached_ids(spark)
+        out = run()
+        assert out.count() == n_rows, name
+        new = _cached_ids(spark) - base
+        assert len(new) <= 1, f"{name} left {len(new)} pinned RDDs"
+        release_local_checkpoint(out, blocking=True)
+
+
+def _path_graph_cc(spark, max_rounds):
+    from prajna_spark.pipeline.dedup import connected_components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(15)], "id_a long, id_b long"
+    )
+    nodes = spark.createDataFrame([(i,) for i in range(16)], "id long")
+    return connected_components(edges, nodes, max_iter=max_rounds)
+
+
+def _tailed_triangle_kcore(spark, max_rounds):
+    # k=2 peels the tail 5, then 4, then 3: three rounds to the fixpoint
+    from prajna_spark.operators.triangles import k_core
+
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (0, 2), (2, 3), (3, 4), (4, 5)], "src long, dst long"
+    )
+    return k_core(edges, 2, max_rounds=max_rounds)
+
+
+@pytest.mark.parametrize(
+    "run, n_rows", [(_path_graph_cc, 16), (_tailed_triangle_kcore, 3)]
+)
+def test_convergence_checked_loops_raise_on_exhaustion(spark, run, n_rows):
+    """A convergence-checked loop that runs out of rounds raises instead
+    of returning unconverged state, and leaves no pinned generation; the
+    same input converges under the default budget."""
     base = _cached_ids(spark)
-    pr = pagerank(pr_edges, n_iter=6)
-    assert pr.count() == 4
-    pr_new = _cached_ids(spark) - base
-    assert len(pr_new) <= 1, f"pagerank left {len(pr_new)} pinned RDDs"
-    release_local_checkpoint(pr, blocking=True)
+    with pytest.raises(RuntimeError, match="did not converge within 1 rounds"):
+        run(spark, 1)
+    assert not (_cached_ids(spark) - base)
+    assert run(spark, 20).count() == n_rows
 
 
 def test_scope_exit_tolerates_concurrent_removal(spark, caplog):

@@ -92,39 +92,6 @@ def main() -> int:
     fails = [n for n, r in rows.items() if r["last_verdict"] == "FAIL"]
     print(f"catalog: {len(rows)} queries; latest driver round: r{ledger['latest_round']}")
     print(f"never driver-recorded: {len(never)}" + (f" -> {never}" if never else ""))
-    from prajna_spark.queries import (
-        _FORCE_RERECORD,
-        _NEWEST_UNRECORDED,
-        _OLDEST_UNRECORDED,
-    )
-
-    pinned_first = sorted(n for n in never if n in _OLDEST_UNRECORDED)
-    pinned_last = sorted(n for n in never if n in _NEWEST_UNRECORDED)
-    # The forced tier is self-clearing: it only applies while the latest
-    # driver record is red (mirrors queries/__init__.py sort_key).
-    forced = sorted(
-        n for n in rows if n in _FORCE_RERECORD and rows[n]["last_verdict"] == "FAIL"
-    )
-    cleared = sorted(
-        n for n in rows if n in _FORCE_RERECORD and rows[n]["last_verdict"] != "FAIL"
-    )
-    if pinned_first:
-        print(f"  pinned FIRST in rotation (oldest catalog entries): {pinned_first}")
-    if pinned_last:
-        print(
-            "  pinned LAST in rotation (new this round; must not displace"
-            f" the backlog): {pinned_last}"
-        )
-    if forced:
-        print(
-            "  forced re-record (red last record, fix shipped;"
-            f" sorts right after the never-recorded block): {forced}"
-        )
-    if cleared:
-        print(
-            "  forced-tier entries CLEARED (green record landed; ordinary"
-            f" staleness applies): {cleared}"
-        )
     print(f"driver FAIL at last record: {len(fails)}" + (f" -> {fails}" if fails else ""))
     by_staleness: dict[int, list[str]] = {}
     for n, r in rows.items():

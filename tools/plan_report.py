@@ -80,15 +80,21 @@ def main() -> None:
             "audit scale), `pruned` whether a scan carries "
             "non-empty partition filters.\n\n"
             "CAVEAT — iterative operators are OPAQUE here: queries built "
-            "on localCheckpoint loops (pagerank_part_supplier, "
-            "dedup_connected_components, resolve_part_entities, "
-            "ivf_kmeans_centroids) run their per-iteration shuffles "
+            "on localCheckpoint loops — the nine on the "
+            "operators.lifecycle.iterate fixpoint loop "
+            "(pagerank_part_supplier, bfs_hops_from_nation, "
+            "sssp_supplier_costs, kcore_parts_dense, "
+            "labelprop_part_communities, modularity_part_communities, "
+            "dedup_connected_components, dedup_canonical_docs, "
+            "resolve_part_entities) and the k-means loop of "
+            "ivf_kmeans_centroids — run their per-iteration shuffles "
             "EAGERLY during checkpointing, so their audited plan is the "
             "post-checkpoint tail and reports ~0 shuffles/scans. Their "
             "plan discipline is enforced by dedicated tests instead "
             "(shuffle-hash hints + bounded checkpoint generations: "
-            "tests/test_plans.py, test_pagerank.py) and their traffic "
-            "shows in BENCH shuffle-volume metrics, not this table.\n\n"
+            "tests/test_plans.py, test_lifecycle.py, test_shuffle_volume.py) "
+            "and their traffic shows in BENCH shuffle-volume metrics, not "
+            "this table.\n\n"
             "| query | shuffles | fanouts | broadcasts | scans | python | cartesian | pruned |\n"
             "|---|---|---|---|---|---|---|---|\n"
         )
